@@ -22,9 +22,14 @@ Two paths:
   keys/values (the analogue of the reference's opaque ``k1Base…v3Base``
   heap objects).  Keys only need ``__lt__``.  Distributed via RDD because
   rows are schema-less Python objects — the one legitimate RDD use in this
-  engine.  Grouping = global sort by key (range partitioner, comparisons
-  only) + adjacent-run merge per partition: a distributed sort-merge
-  groupByKey that never calls ``hash()``.
+  engine.  Two Spark jobs: a one-pass sketch (per-partition count +
+  seeded reservoir sample of k2, as Spark's ``RangePartitioner``) picks
+  range bounds, then one job range-partitions by ``bisect`` on the bounds,
+  sorts each partition (spilling ``ExternalSorter``), merges adjacent
+  comparator-equal runs into whole groups, reduces and collects — a
+  distributed sort-merge groupByKey that never calls ``hash()``.  The
+  global k3 sort runs on the driver over the collected list, like the
+  reference's single-process ``std::list::sort``.
 - :func:`run_map_reduce_df` — **DataFrame path** (the scale path): input
   is a DataFrame, map = Arrow-batched ``mapInPandas`` UDTF (the Emit2
   analogue: yielded rows), group = ``groupBy`` on key columns, reduce =
@@ -46,11 +51,17 @@ Deviation notes vs the reference, recorded for the judge:
 
 from __future__ import annotations
 
+import bisect
 import functools
 import logging
+import math
+import operator
+import random
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any, TypeVar
 
+from pyspark import RDD
+from pyspark.shuffle import ExternalSorter
 from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger("map_reduce_framework_spark.mapreduce")
@@ -104,6 +115,90 @@ def _merge_sorted_runs(
             cur_key, cur_vals, have = k, [v], True
     if have:
         yield cur_key, cur_vals
+
+
+#: sort key of a (key, value) pair; sorting by it calls only ``__lt__``
+_first = operator.itemgetter(0)
+
+#: sampled keys per output partition, Spark's ``RangePartitioner`` constant
+#: (oversampled 3x across the input partitions, as its ``sketch`` does)
+_SAMPLE_PER_PARTITION = 20
+
+
+def _sort_merge_groups(
+    part: Iterator[tuple[Any, Any]], memory_mb: float
+) -> Iterator[tuple[Any, list]]:
+    """Sort one partition by key and merge it into (key, [values]) groups.
+
+    The sort is ``ExternalSorter`` under a ``memory_mb`` budget, as in
+    ``RDD.sortByKey``, so a partition larger than the budget spills to
+    disk instead of failing."""
+    return _merge_sorted_runs(ExternalSorter(memory_mb).sorted(part, key=_first))
+
+
+def _sketch_partition(
+    idx: int, part: Iterator[tuple[Any, Any]], size: int
+) -> Iterator[tuple[int, list]]:
+    """Count one partition and reservoir-sample ``size`` of its keys,
+    seeded by the partition index (``RangePartitioner.sketch``)."""
+    rng = random.Random(idx)
+    sample: list = []
+    count = 0
+    for count, kv in enumerate(part, 1):
+        if count <= size:
+            sample.append(kv[0])
+        else:
+            j = rng.randrange(count)
+            if j < size:
+                sample[j] = kv[0]
+    yield count, sample
+
+
+def _range_bounds(sketch: list[tuple[int, list]], n: int) -> list:
+    """Up to ``n - 1`` strictly increasing keys that split the sampled key
+    distribution into ``n`` equal-weight ranges (``determineBounds``): each
+    sampled key weighs its partition's count over its sample size.  Only
+    ``<`` is called on keys."""
+    weighted = [
+        (k, count / len(sample)) for count, sample in sketch if sample for k in sample
+    ]
+    weighted.sort(key=_first)
+    step = sum(w for _, w in weighted) / n
+    bounds: list = []
+    cum, target = 0.0, step
+    for k, w in weighted:
+        cum += w
+        if cum >= target and (not bounds or bounds[-1] < k):
+            bounds.append(k)
+            if len(bounds) == n - 1:
+                break
+            target += step
+    return bounds
+
+
+def _group_by_key(mapped: RDD, n: int) -> RDD | None:
+    """Comparator-keyed groupByKey of (k2, v2) pairs into ``n`` partitions.
+
+    A sketch job samples the keys; the bounds range-partition them with
+    ``bisect_left``, which gives comparator-equal keys the same partition;
+    each partition is then sorted and merged into whole groups (§2.3c,f).
+    ``hash()`` is never called.  Returns ``None``, with no second job, when
+    the sketch counts no pairs."""
+    sort_merge = functools.partial(
+        _sort_merge_groups, memory_mb=mapped._memory_limit() * 0.9
+    )
+    if n == 1:
+        return mapped.mapPartitions(sort_merge, preservesPartitioning=True)
+    size = math.ceil(3 * _SAMPLE_PER_PARTITION * n / mapped.getNumPartitions())
+    sketch = mapped.mapPartitionsWithIndex(
+        functools.partial(_sketch_partition, size=size)
+    ).collect()
+    if not any(count for count, _ in sketch):
+        return None
+    bounds = _range_bounds(sketch, n)
+    return mapped.partitionBy(
+        n, functools.partial(bisect.bisect_left, bounds)
+    ).mapPartitions(sort_merge, preservesPartitioning=True)
 
 
 class MapReduceLogger:
@@ -175,6 +270,10 @@ def run_map_reduce(
     parallelism); the reference's chunk-of-10 work stealing
     (MapReduceFramework.cpp:18,327-336) is subsumed by Spark task
     scheduling.
+
+    Without ``log_path`` a call runs two Spark jobs (one when
+    ``num_partitions`` is 1, or when ``map_fn`` emits nothing): the range
+    sketch and the grouping+reduce job.
     """
     import time
 
@@ -198,34 +297,38 @@ def run_map_reduce(
             mrlog.worker("ExecMap", "created")
         mrlog.worker("Shuffle", "created")
     mapped = sc.parallelize(items, n).flatMap(lambda kv: map_fn(kv[0], kv[1]))
-    # Sort-based grouping: range-partition + per-partition sort use only
-    # __lt__ (via tuple-free keyfunc); comparator-equal keys land in the
-    # same partition and adjacently, then merge into whole groups (§2.3c,f).
-    grouped = mapped.sortBy(lambda kv: kv[0], numPartitions=n).mapPartitions(
-        _merge_sorted_runs, preservesPartitioning=True
-    )
-    if mrlog:
-        # materialize the grouped stage so the phase boundary (§2.3g) is
-        # observable for the timing lines, like the reference's join
-        # barrier; without logging, Spark's shuffle stage boundary alone
-        # provides the same observable semantics with one job
-        grouped = grouped.cache()
-        grouped.count()
-    t1 = time.perf_counter_ns()
-    if mrlog:
-        for _ in range(n):
-            mrlog.worker("ExecMap", "terminated")
-        mrlog.worker("Shuffle", "terminated")
-        for _ in range(n):
-            mrlog.worker("ExecReduce", "created")
-    reduced = grouped.flatMap(lambda kv: reduce_fn(kv[0], kv[1]))
-    # Global k3 sort (§2.3a).  collect() is the reference's returned
-    # OUT_ITEMS_LIST (:764) — the object path is a driver-side API by
-    # definition, mirroring the reference's single-process output list.
-    out = reduced.sortBy(lambda kv: kv[0], numPartitions=n).collect()
+    grouped = _group_by_key(mapped, n)
+    cached = grouped is not None and mrlog is not None
+    out: list[tuple[Any, Any]] = []
+    try:
+        if cached:
+            # materialize the grouped stage so the phase boundary (§2.3g)
+            # is observable for the timing lines, like the reference's join
+            # barrier; without logging, Spark's shuffle stage boundary
+            # alone provides the same observable semantics
+            grouped.cache().count()
+        t1 = time.perf_counter_ns()
+        if mrlog:
+            for _ in range(n):
+                mrlog.worker("ExecMap", "terminated")
+            mrlog.worker("Shuffle", "terminated")
+            for _ in range(n):
+                mrlog.worker("ExecReduce", "created")
+        if grouped is not None:
+            # collect() is the reference's returned OUT_ITEMS_LIST (:764) —
+            # the object path is a driver-side API by definition, so the
+            # output list lives in driver memory either way
+            out = grouped.flatMap(lambda kv: reduce_fn(kv[0], kv[1])).collect()
+    finally:
+        if cached:
+            grouped.unpersist(blocking=False)
+    # Global k3 sort (§2.3a), on the driver like the reference's single
+    # std::list::sort (:546-558).  list.sort is stable and calls only
+    # __lt__; with k3 == k2 the collected partitions are already sorted
+    # runs, so timsort is close to linear.
+    out.sort(key=_first)
     t2 = time.perf_counter_ns()
     if mrlog:
-        grouped.unpersist(blocking=False)
         for _ in range(n):
             mrlog.worker("ExecReduce", "terminated")
         mrlog.timing("Map and Shuffle", t1 - t0)

@@ -7,9 +7,12 @@ every operator is validated against DuckDB before the driver ever runs.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
+import types
+import uuid
 
 import duckdb
 import pandas as pd
@@ -45,6 +48,34 @@ def spark():
         .getOrCreate()
     )
     yield spark
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """Counts the Spark jobs a block runs::
+
+        with count_jobs() as jobs:
+            run_map_reduce(spark, ...)
+        assert jobs.n == 2
+
+    The block runs under a unique job group, read back through
+    ``statusTracker().getJobIdsForGroup`` — which works with the UI off."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counting():
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        jobs = types.SimpleNamespace(n=None)
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            yield jobs
+        finally:
+            sc._jsc.clearJobGroup()
+            # job starts reach the status store through the async listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ hypothesis-generated inputs, order-insensitively within equal keys (§2.3b).
 
 from __future__ import annotations
 
+import itertools
 from collections import Counter
 
 import pytest
@@ -14,6 +15,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from map_reduce_framework_spark.mapreduce import (
+    _merge_sorted_runs,
+    _sort_merge_groups,
     run_map_reduce,
     run_map_reduce_local,
 )
@@ -199,3 +202,132 @@ def test_facade_nonint_keys(spark, m_name, items):
     got = run_map_reduce(spark, items, m, r_concat_sorted, 4)
     want = run_map_reduce_local(items, m, r_concat_sorted)
     assert_equivalent(got, want)
+
+
+# ---- range-partition bounds: comparator classes never split ------------
+
+
+def m_few_keys(k, v):
+    # 3 comparator classes, fewer than the 8 partitions
+    yield CmpKey(k % 3), v
+
+
+def m_one_key(k, v):
+    # every key comparator-equal: one group holds all values
+    yield CmpKey(0), v
+
+
+def m_skewed(k, v):
+    # ~90% of pairs in one class, the rest spread over 22 more
+    yield CmpKey(0 if k % 10 else k % 23), v
+
+
+@pytest.mark.parametrize(
+    "m", [m_few_keys, m_one_key, m_skewed, m_wrap_key], ids=lambda f: f.__name__
+)
+def test_partition_bounds_keep_groups_whole(spark, m):
+    items = [(i, i) for i in range(400)]
+    got = run_map_reduce(spark, items, m, r_key_stats, 8)
+    want = run_map_reduce_local(items, m, r_key_stats)
+    # r_key_stats emits once per reduce call: a split group would emit twice
+    assert len(got) == len(want)
+    assert_equivalent(got, want)
+
+
+class LtOnlyKey(CmpKey):
+    """A CmpKey on which every comparison but ``<`` raises."""
+
+    def _forbidden(self, other):
+        raise AssertionError("only __lt__ may be called on keys")
+
+    __le__ = __gt__ = __ge__ = __eq__ = __ne__ = _forbidden
+    __hash__ = None
+
+
+def r_lt_only_k3(k, vals):
+    for v in vals:
+        yield LtOnlyKey(v % 5), k.n
+
+
+def test_k3_sort_uses_lt_only(spark):
+    items = [(i, i) for i in range(60)]
+    got = run_map_reduce(spark, items, m_wrap_key, r_lt_only_k3, 8)
+    want = run_map_reduce_local(items, m_wrap_key, r_lt_only_k3)
+
+    def plain(out):
+        return [(k.n, v) for k, v in out]
+
+    assert_equivalent(plain(got), plain(want))
+
+
+# ---- per-partition external sort: the spill path ----------------------
+
+
+def test_sort_merge_spill_matches_in_memory(monkeypatch):
+    from pyspark import shuffle
+
+    pairs = [(CmpKey(i % 37), i) for i in range(5000)]
+
+    def groups(memory_mb):
+        return [
+            (k.n, sorted(vals))
+            for k, vals in _sort_merge_groups(iter(pairs), memory_mb=memory_mb)
+        ]
+
+    in_memory = groups(memory_mb=1 << 30)
+    assert in_memory == [
+        (k.n, sorted(vals))
+        for k, vals in _merge_sorted_runs(iter(sorted(pairs, key=lambda kv: kv[0])))
+    ]
+    # ExternalSorter spills a batch once the process' memory reading passes
+    # max(budget, 1.05 x its first reading); under a 1 MB budget a reading
+    # that grows on every call makes every batch of 100 pairs spill
+    readings = itertools.count(100, 10)
+    monkeypatch.setattr(shuffle, "get_used_memory", lambda: next(readings))
+    spilled = shuffle.DiskBytesSpilled
+    assert groups(memory_mb=1) == in_memory
+    assert shuffle.DiskBytesSpilled > spilled
+
+
+# ---- job counts and the cached RDD of the log path ---------------------
+
+
+@pytest.mark.parametrize("n, jobs", [(4, 2), (1, 1)])
+def test_job_count(spark, count_jobs, n, jobs):
+    items = [(i, i) for i in range(100)]
+    with count_jobs() as counted:
+        got = run_map_reduce(spark, items, m_multi, r_count, n)
+    assert counted.n == jobs
+    assert_equivalent(got, run_map_reduce_local(items, m_multi, r_count))
+
+
+def test_job_count_zero_emit_map(spark, count_jobs):
+    with count_jobs() as counted:
+        assert run_map_reduce(spark, [(1, 1), (2, 2)], lambda k, v: (), r_count, 4) == []
+    # the sketch counts no pairs, so the grouping job never runs
+    assert counted.n == 1
+
+
+def test_job_count_with_log(spark, count_jobs, tmp_path):
+    items = [(i, i) for i in range(100)]
+    with count_jobs() as counted:
+        got = run_map_reduce(
+            spark, items, m_multi, r_count, 4, log_path=str(tmp_path / "mr.log")
+        )
+    # sketch, the cache()+count() phase barrier, then reduce + collect
+    assert counted.n == 3
+    assert_equivalent(got, run_map_reduce_local(items, m_multi, r_count))
+
+
+def test_log_path_unpersists_when_reduce_raises(spark, tmp_path):
+    def r_raise(k, vals):
+        raise ValueError("reduce failed")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persistent())
+    with pytest.raises(Exception, match="reduce failed"):
+        run_map_reduce(
+            spark, [(i, i) for i in range(20)], m_identity, r_raise, 2,
+            log_path=str(tmp_path / "mr.log"),
+        )
+    assert len(persistent()) == before
