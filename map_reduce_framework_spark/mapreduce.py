@@ -22,20 +22,24 @@ Two paths:
   keys/values (the analogue of the reference's opaque ``k1Base…v3Base``
   heap objects).  Keys only need ``__lt__``.  Distributed via RDD because
   rows are schema-less Python objects — the one legitimate RDD use in this
-  engine.  Two Spark jobs: a one-pass sketch (per-partition count +
-  seeded reservoir sample of k2, as Spark's ``RangePartitioner``) picks
-  range bounds, then one job range-partitions by ``bisect`` on the bounds,
-  sorts each partition (spilling ``ExternalSorter``), merges adjacent
-  comparator-equal runs into whole groups, reduces and collects — a
-  distributed sort-merge groupByKey that never calls ``hash()``.  The
-  global k3 sort runs on the driver over the collected list, like the
-  reference's single-process ``std::list::sort``.
+  engine.  One Spark job: the input items already sit in a driver list,
+  so ``map_fn`` runs on a seeded sample of them on the driver to pick
+  range bounds (as Spark's ``RangePartitioner`` sketch would, without
+  its job); the job range-partitions the map output by ``bisect`` on the
+  bounds, sorts each partition (spilling ``ExternalSorter``), merges
+  adjacent comparator-equal runs into whole groups, reduces and collects
+  — a distributed sort-merge groupByKey that never calls ``hash()``.
+  The global k3 sort runs on the driver over the collected list, like
+  the reference's single-process ``std::list::sort``.
 - :func:`run_map_reduce_df` — **DataFrame path** (the scale path): input
   is a DataFrame, map = Arrow-batched ``mapInPandas`` UDTF (the Emit2
-  analogue: yielded rows), group = ``groupBy`` on key columns, reduce =
-  ``applyInPandas`` whole-group UDTF (Emit3 analogue), output ``orderBy``
-  k3 columns.  Catalyst plans the shuffles; at 100 TB this is the path to
-  use, with AQE handling skewed k2 groups.
+  analogue: yielded rows), group = hash repartition on the key columns,
+  reduce = ``applyInPandas`` whole-group UDTF (Emit3 analogue) over
+  ``spark.sql.shuffle.partitions`` tasks, output = hash repartition on the
+  k3 columns, then ``orderBy`` them, so the reduce runs once per group.
+  Its output stays distributed.  Skew is not handled: a k2 group is one
+  ``applyInPandas`` call and is never split (§2.3f), and AQE splits
+  skewed partitions only for joins, so one hot key bounds one task.
 
 Deviation notes vs the reference, recorded for the judge:
 - the LIBRARY entry points take an opt-in ``log_path`` (the CLI client
@@ -54,13 +58,12 @@ from __future__ import annotations
 import bisect
 import functools
 import logging
-import math
 import operator
 import random
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any, TypeVar
 
-from pyspark import RDD
+from pyspark import RDD, SparkContext
 from pyspark.shuffle import ExternalSorter
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,7 +124,7 @@ def _merge_sorted_runs(
 _first = operator.itemgetter(0)
 
 #: sampled keys per output partition, Spark's ``RangePartitioner`` constant
-#: (oversampled 3x across the input partitions, as its ``sketch`` does)
+#: (oversampled 3x, as its ``sketch`` does)
 _SAMPLE_PER_PARTITION = 20
 
 
@@ -136,38 +139,31 @@ def _sort_merge_groups(
     return _merge_sorted_runs(ExternalSorter(memory_mb).sorted(part, key=_first))
 
 
-def _sketch_partition(
-    idx: int, part: Iterator[tuple[Any, Any]], size: int
-) -> Iterator[tuple[int, list]]:
-    """Count one partition and reservoir-sample ``size`` of its keys,
-    seeded by the partition index (``RangePartitioner.sketch``)."""
-    rng = random.Random(idx)
-    sample: list = []
-    count = 0
-    for count, kv in enumerate(part, 1):
-        if count <= size:
-            sample.append(kv[0])
-        else:
-            j = rng.randrange(count)
-            if j < size:
-                sample[j] = kv[0]
-    yield count, sample
+def _driver_sample(items: list, map_fn: MapFn, size: int) -> list:
+    """Up to ``size`` k2 keys, from ``map_fn`` run on the driver over a
+    seeded random sample of at most ``size`` items.
+
+    The items already sit in a driver list, so this takes the place of
+    ``RangePartitioner``'s sketch job; it stops once ``size`` keys are
+    collected."""
+    keys: list = []
+    for k1, v1 in random.Random(0).sample(items, min(size, len(items))):
+        for k2, _ in map_fn(k1, v1):
+            keys.append(k2)
+            if len(keys) == size:
+                return keys
+    return keys
 
 
-def _range_bounds(sketch: list[tuple[int, list]], n: int) -> list:
-    """Up to ``n - 1`` strictly increasing keys that split the sampled key
-    distribution into ``n`` equal-weight ranges (``determineBounds``): each
-    sampled key weighs its partition's count over its sample size.  Only
+def _range_bounds(keys: list, n: int) -> list:
+    """Up to ``n - 1`` strictly increasing keys that split the sampled
+    ``keys`` into ``n`` equal-count ranges (``determineBounds``).  Only
     ``<`` is called on keys."""
-    weighted = [
-        (k, count / len(sample)) for count, sample in sketch if sample for k in sample
-    ]
-    weighted.sort(key=_first)
-    step = sum(w for _, w in weighted) / n
+    keys = sorted(keys)
+    step = len(keys) / n
     bounds: list = []
-    cum, target = 0.0, step
-    for k, w in weighted:
-        cum += w
+    target = step
+    for cum, k in enumerate(keys, 1):
         if cum >= target and (not bounds or bounds[-1] < k):
             bounds.append(k)
             if len(bounds) == n - 1:
@@ -176,29 +172,25 @@ def _range_bounds(sketch: list[tuple[int, list]], n: int) -> list:
     return bounds
 
 
-def _group_by_key(mapped: RDD, n: int) -> RDD | None:
-    """Comparator-keyed groupByKey of (k2, v2) pairs into ``n`` partitions.
+def _group_by_key(sc: SparkContext, items: list, map_fn: MapFn, n: int) -> RDD:
+    """Map ``items`` and group the (k2, v2) pairs by comparator-equal key
+    into ``n`` partitions.
 
-    A sketch job samples the keys; the bounds range-partition them with
+    Bounds from a driver-side key sample range-partition the pairs with
     ``bisect_left``, which gives comparator-equal keys the same partition;
     each partition is then sorted and merged into whole groups (§2.3c,f).
-    ``hash()`` is never called.  Returns ``None``, with no second job, when
-    the sketch counts no pairs."""
+    ``hash()`` is never called.  With no sampled keys the bounds are empty
+    and every pair lands in partition 0, which is still correct."""
+    mapped = sc.parallelize(items, n).flatMap(lambda kv: map_fn(kv[0], kv[1]))
     sort_merge = functools.partial(
         _sort_merge_groups, memory_mb=mapped._memory_limit() * 0.9
     )
-    if n == 1:
-        return mapped.mapPartitions(sort_merge, preservesPartitioning=True)
-    size = math.ceil(3 * _SAMPLE_PER_PARTITION * n / mapped.getNumPartitions())
-    sketch = mapped.mapPartitionsWithIndex(
-        functools.partial(_sketch_partition, size=size)
-    ).collect()
-    if not any(count for count, _ in sketch):
-        return None
-    bounds = _range_bounds(sketch, n)
-    return mapped.partitionBy(
-        n, functools.partial(bisect.bisect_left, bounds)
-    ).mapPartitions(sort_merge, preservesPartitioning=True)
+    if n > 1:
+        keys = _driver_sample(items, map_fn, 3 * _SAMPLE_PER_PARTITION * n)
+        mapped = mapped.partitionBy(
+            n, functools.partial(bisect.bisect_left, _range_bounds(keys, n))
+        )
+    return mapped.mapPartitions(sort_merge, preservesPartitioning=True)
 
 
 class MapReduceLogger:
@@ -271,9 +263,10 @@ def run_map_reduce(
     (MapReduceFramework.cpp:18,327-336) is subsumed by Spark task
     scheduling.
 
-    Without ``log_path`` a call runs two Spark jobs (one when
-    ``num_partitions`` is 1, or when ``map_fn`` emits nothing): the range
-    sketch and the grouping+reduce job.
+    Without ``log_path`` a call runs one Spark job, which maps, groups,
+    reduces and collects; ``log_path`` adds the phase-barrier job.  With
+    more than one partition, ``map_fn`` also runs on the driver over a
+    sample of at most ``3 * 20 * n`` items, to pick the range bounds.
     """
     import time
 
@@ -296,12 +289,9 @@ def run_map_reduce(
         for _ in range(n):
             mrlog.worker("ExecMap", "created")
         mrlog.worker("Shuffle", "created")
-    mapped = sc.parallelize(items, n).flatMap(lambda kv: map_fn(kv[0], kv[1]))
-    grouped = _group_by_key(mapped, n)
-    cached = grouped is not None and mrlog is not None
-    out: list[tuple[Any, Any]] = []
+    grouped = _group_by_key(sc, items, map_fn, n)
     try:
-        if cached:
+        if mrlog:
             # materialize the grouped stage so the phase boundary (§2.3g)
             # is observable for the timing lines, like the reference's join
             # barrier; without logging, Spark's shuffle stage boundary
@@ -314,13 +304,12 @@ def run_map_reduce(
             mrlog.worker("Shuffle", "terminated")
             for _ in range(n):
                 mrlog.worker("ExecReduce", "created")
-        if grouped is not None:
-            # collect() is the reference's returned OUT_ITEMS_LIST (:764) —
-            # the object path is a driver-side API by definition, so the
-            # output list lives in driver memory either way
-            out = grouped.flatMap(lambda kv: reduce_fn(kv[0], kv[1])).collect()
+        # collect() is the reference's returned OUT_ITEMS_LIST (:764) —
+        # the object path is a driver-side API by definition, so the
+        # output list lives in driver memory either way
+        out = grouped.flatMap(lambda kv: reduce_fn(kv[0], kv[1])).collect()
     finally:
-        if cached:
+        if mrlog:
             grouped.unpersist(blocking=False)
     # Global k3 sort (§2.3a), on the driver like the reference's single
     # std::list::sort (:546-558).  list.sort is stable and calls only
@@ -354,13 +343,32 @@ def run_map_reduce_df(
     pd.DataFrame with ``reduce_schema``) — each returned row is an Emit3.
     Output ordered by ``order_cols`` (default: ``reduce_schema``'s first
     column, the k3 analogue).
+
+    With ``n = spark.sql.shuffle.partitions``, the plan is:
+
+    - the map output is hash-repartitioned to ``n`` partitions by
+      ``key_cols``.  That exchange already clusters every k2 group, so
+      ``applyInPandas`` adds none of its own, and AQE never coalesces a
+      repartition to an explicit count: the reduce runs as ``n`` tasks,
+      not the one task a small, coalesced k2 shuffle would give it;
+    - the reduce output is hash-repartitioned to ``n`` partitions by
+      ``order_cols``.  The reduce thus writes shuffle files once, and the
+      range sample and range shuffle of the final ``orderBy`` read those
+      files in the JVM instead of running the reduce a second time.
+
+    The trade is that the reduce output crosses two shuffles, for one
+    Python pass over the groups.  A skewed k2 group is not split: it is
+    one ``applyInPandas`` call (§2.3f), in one task.
     """
-    mapped = input_df.mapInPandas(map_fn, schema=map_schema)
+    n = int(input_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    mapped = input_df.mapInPandas(map_fn, schema=map_schema).repartition(
+        n, *key_cols
+    )
     reduced = mapped.groupBy(*key_cols).applyInPandas(
         reduce_fn, schema=reduce_schema
     )
     order_cols = order_cols or [reduced.columns[0]]
-    return reduced.orderBy(*order_cols)
+    return reduced.repartition(n, *order_cols).orderBy(*order_cols)
 
 
 def run_map_reduce_local(

@@ -18,6 +18,7 @@ from map_reduce_framework_spark.mapreduce import (
     _merge_sorted_runs,
     _sort_merge_groups,
     run_map_reduce,
+    run_map_reduce_df,
     run_map_reduce_local,
 )
 
@@ -292,7 +293,7 @@ def test_sort_merge_spill_matches_in_memory(monkeypatch):
 # ---- job counts and the cached RDD of the log path ---------------------
 
 
-@pytest.mark.parametrize("n, jobs", [(4, 2), (1, 1)])
+@pytest.mark.parametrize("n, jobs", [(4, 1), (1, 1)])
 def test_job_count(spark, count_jobs, n, jobs):
     items = [(i, i) for i in range(100)]
     with count_jobs() as counted:
@@ -304,7 +305,8 @@ def test_job_count(spark, count_jobs, n, jobs):
 def test_job_count_zero_emit_map(spark, count_jobs):
     with count_jobs() as counted:
         assert run_map_reduce(spark, [(1, 1), (2, 2)], lambda k, v: (), r_count, 4) == []
-    # the sketch counts no pairs, so the grouping job never runs
+    # the driver sample finds no keys, so the bounds are empty; the one
+    # job still runs, and returns nothing
     assert counted.n == 1
 
 
@@ -314,9 +316,46 @@ def test_job_count_with_log(spark, count_jobs, tmp_path):
         got = run_map_reduce(
             spark, items, m_multi, r_count, 4, log_path=str(tmp_path / "mr.log")
         )
-    # sketch, the cache()+count() phase barrier, then reduce + collect
-    assert counted.n == 3
+    # the cache()+count() phase barrier, then reduce + collect
+    assert counted.n == 2
     assert_equivalent(got, run_map_reduce_local(items, m_multi, r_count))
+
+
+def m_every_third(k, v):
+    if k % 3 == 0:
+        yield k % 7, v
+
+
+def test_driver_sample_bounds_map_calls(spark):
+    n = 4
+    driver_calls = []
+
+    def m_recorded(k, v):
+        # the list is pickled with the closure, so only driver calls reach it
+        driver_calls.append(k)
+        return m_every_third(k, v)
+
+    # with one emit per three items, a sample that ran on until it had
+    # 3 * 20 * n keys would map about 3 * 3 * 20 * n items
+    items = [(i, i) for i in range(1000)]
+    got = run_map_reduce(spark, items, m_recorded, r_count, n)
+    assert len(driver_calls) <= 3 * 20 * n
+    assert_equivalent(got, run_map_reduce_local(items, m_every_third, r_count))
+
+
+def m_sparse(k, v):
+    if k % 400 == 0:
+        yield CmpKey(k // 400), v
+
+
+def test_driver_sample_without_keys(spark):
+    # 4 of 1,600 items emit; the 240-item driver sample may hold none of
+    # them (with its seed it holds none), which leaves the bounds empty
+    items = [(i, i) for i in range(1600)]
+    got = run_map_reduce(spark, items, m_sparse, r_key_stats, 4)
+    want = run_map_reduce_local(items, m_sparse, r_key_stats)
+    assert len(got) == 4
+    assert_equivalent(got, want)
 
 
 def test_log_path_unpersists_when_reduce_raises(spark, tmp_path):
@@ -331,3 +370,33 @@ def test_log_path_unpersists_when_reduce_raises(spark, tmp_path):
             log_path=str(tmp_path / "mr.log"),
         )
     assert len(persistent()) == before
+
+
+# ---- DataFrame path: one reduce call per group, on every task ----------
+
+
+def test_df_reduce_runs_once_per_group_in_parallel(spark):
+    import pandas as pd
+    from pyspark import TaskContext
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def m_mod50(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"k": pdf["id"] % 50, "v": pdf["id"]})
+
+    def r_partition(pdf):
+        calls.add(1)
+        return pd.DataFrame(
+            {"k": [pdf["k"].iloc[0]], "pid": [TaskContext.get().partitionId()]}
+        )
+
+    rows = run_map_reduce_df(
+        spark.range(1000), m_mod50, "k long, v long", ["k"],
+        r_partition, "k long, pid int",
+    ).collect()
+    assert [r.k for r in rows] == list(range(50))
+    # a reduce re-run by the orderBy's range sample would count 100 calls
+    assert calls.value == 50
+    # a reduce in one coalesced task would report a single partition id
+    assert len({r.pid for r in rows}) > 1

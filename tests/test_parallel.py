@@ -58,6 +58,23 @@ def test_co_materialize_body_error_wins(spark):
             raise bad_body
 
 
+def test_co_materialize_logs_background_error_when_body_raises(
+    spark, monkeypatch, caplog
+):
+    from pyspark.sql import functions as F
+
+    monkeypatch.delenv("SPARK_GRAFT_OVERLAP", raising=False)
+    bad = spark.range(10).select(F.assert_true(F.col("id") < 5).alias("x"))
+    with pytest.raises(RuntimeError, match="body failure"):
+        with co_materialize(bad, "test: failing branch"):
+            raise RuntimeError("body failure")
+    [record] = [
+        r for r in caplog.records if r.name == "map_reduce_framework_spark.parallel"
+    ]
+    assert "test: failing branch" in record.getMessage()
+    assert record.exc_info is not None
+
+
 def test_co_materialize_noop_when_disabled(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
     df = spark.range(10)
